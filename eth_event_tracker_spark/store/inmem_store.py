@@ -25,7 +25,7 @@ class InMemStore:
 
     # -- entries ------------------------------------------------------------
     def entry(
-        self, filter_hash: str, bucket_size: int = 10_000, schema=None, changelog: bool = False
+        self, filter_hash: str, bucket_size: int = 10_000, changelog: bool = False
     ) -> "InMemEntry":
         if filter_hash not in self._entries:
             self._entries[filter_hash] = InMemEntry(changelog=changelog)
@@ -69,15 +69,22 @@ class InMemEntry:
     def all_logs(self) -> list[dict]:
         return list(self._rows)
 
-    def scan_tail(self, block_hashes: set[str]) -> list[dict]:
+    def scan_tail(self, match) -> list[dict]:
         victims: list[dict] = []
         for r in reversed(self._rows):
-            if r["block_hash"] in block_hashes:
-                victims.append(r)
-            else:
+            if not match(r):
                 break
+            victims.append(r)
         victims.reverse()
         return victims
+
+    def append_df(self, df) -> int:
+        """Bulk path (interface parity): rows come to the driver in the
+        canonical order and are indexed like ``store_logs``."""
+        from ..operators.indexing import ORDER_COLS
+
+        rows = df.orderBy(*ORDER_COLS).collect()
+        return len(self.store_logs([r.asDict(recursive=True) for r in rows]))
 
     def compact(self, bucket: int | None = None) -> int:
         return 0  # nothing to compact in memory

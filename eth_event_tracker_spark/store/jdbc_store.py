@@ -180,7 +180,7 @@ class JdbcStore:
 
     # -- entries (GetEntry, postgresql_store.go:79-88) ----------------------
     def entry(
-        self, filter_hash: str, bucket_size: int = 10_000, schema=None, changelog: bool = False
+        self, filter_hash: str, bucket_size: int = 10_000, changelog: bool = False
     ) -> "JdbcEntry":
         if filter_hash not in self._entries:
             self._entries[filter_hash] = JdbcEntry(
@@ -310,10 +310,10 @@ class JdbcEntry:
         finally:
             st.close()
 
-    def scan_tail(self, block_hashes: set[str]) -> list[dict]:
+    def scan_tail(self, match) -> list[dict]:
         """Reverse tail walk (tracker.go:717-754): indx-descending index
-        scan that stops at the first keeper — O(reorg depth) rows fetched,
-        the cursor never materializes the table."""
+        scan that stops at the first row not satisfying ``match`` —
+        O(tail) rows fetched, the cursor never materializes the table."""
         st = self._conn.createStatement()
         try:
             rs = st.executeQuery(
@@ -321,11 +321,10 @@ class JdbcEntry:
             )
             victims: list[dict] = []
             while rs.next():
-                row = self._row(rs)
-                if row[5] in block_hashes:  # block_hash position in _COLUMNS
-                    victims.append(_decode(row, self.columns))
-                else:
+                r = _decode(self._row(rs), self.columns)
+                if not match(r):
                     break
+                victims.append(r)
             victims.reverse()
             return victims
         finally:

@@ -23,11 +23,18 @@ Why this layout scales:
 
 Micro-batch appends go through pyarrow (driver-side, the head path is
 ≤ backlog blocks); bulk backfill uses ``append_df`` (distributed Spark
-write).  Both produce the same layout.
+write).  Both produce the same layout, but not the same parquet schema:
+Spark marks ``indx``/``block_num``/``block_hash`` not-null, pyarrow
+writes every column nullable.  Every driver-side read therefore goes
+through ``ParquetEntry._read``, which reads any mix of the two into the
+entry's one schema.
 
 Durability contract matches the reference: StoreLogs persists before the
 checkpoint advances (tracker.go:369-382), so a crash between the two
-replays a suffix — dedupable by deterministic (block_hash, log_index).
+leaves a suffix above the checkpoint, which the tracker truncates on
+resume (``scan_tail`` + ``remove_logs``).  ``remove_logs`` commits its
+intent to meta.json first and makes the kept rows durable before any
+file is deleted, so reopening after a crash finishes the truncation.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ import shutil
 from pathlib import Path
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 ARROW_LOG_SCHEMA = pa.schema(
@@ -53,8 +61,6 @@ ARROW_LOG_SCHEMA = pa.schema(
         ("data", pa.binary()),
     ]
 )
-
-_LOG_COLS = [f.name for f in ARROW_LOG_SCHEMA]
 
 
 def _atomic_write_json(path: Path, obj) -> None:
@@ -87,14 +93,11 @@ class ParquetStore:
 
     # -- entries (GetEntry, store/store.go:16-20) ---------------------------
     def entry(
-        self,
-        filter_hash: str,
-        bucket_size: int = 10_000,
-        schema: pa.Schema | None = None,
-        changelog: bool = False,
+        self, filter_hash: str, bucket_size: int = 10_000, changelog: bool = False
     ) -> "ParquetEntry":
-        if changelog and schema is None:
-            schema = ARROW_LOG_SCHEMA.append(pa.field("change_type", pa.string()))
+        schema = ARROW_LOG_SCHEMA
+        if changelog:
+            schema = schema.append(pa.field("change_type", pa.string()))
         return ParquetEntry(self.root / "entries" / filter_hash, bucket_size, schema)
 
     def changelog_entry(self, filter_hash: str, bucket_size: int = 10_000) -> "ParquetEntry":
@@ -107,11 +110,11 @@ class ParquetEntry:
     """Entry (store/store.go:24-36): ordered, append-only, tail-truncatable."""
 
     def __init__(
-        self, path: Path, bucket_size: int = 10_000, schema: pa.Schema | None = None
+        self, path: Path, bucket_size: int = 10_000, schema: pa.Schema = ARROW_LOG_SCHEMA
     ) -> None:
         self.path = Path(path)
         self.bucket_size = bucket_size
-        self.schema = schema if schema is not None else ARROW_LOG_SCHEMA
+        self.schema = schema
         self.columns = [f.name for f in self.schema]
         self.path.mkdir(parents=True, exist_ok=True)
         self._meta_path = self.path / "meta.json"
@@ -132,10 +135,7 @@ class ParquetEntry:
                 # crash mid-truncation: the truncate intent was committed
                 # before file deletion — finish the job (rows >= meta are
                 # doomed, whatever subset survived the crash)
-                self._last_index = self._scan_last_index()
-                self.remove_logs(meta)
-                self._last_index = meta
-                self._commit_meta()
+                self._truncate(meta)
             else:
                 # append-crash direction: data files commit before meta
                 # (same order as the reference, tracker.go:369-382), so the
@@ -153,14 +153,19 @@ class ParquetEntry:
         # walk buckets top-down: the highest bucket directory can be empty
         # after a crashed truncation — fall through to the next one
         for k in reversed(self._buckets()):
-            mx = -1
-            for f in self._bucket_files(k):
-                t = pq.read_table(f, columns=["indx"])
-                if t.num_rows:
-                    mx = max(mx, pa.compute.max(t.column("indx")).as_py())
-            if mx >= 0:
+            mx = pc.max(self._read(self._bucket_files(k), ["indx"]).column("indx")).as_py()
+            if mx is not None:
                 return mx + 1
         return 0
+
+    def _read(self, files: list[Path], columns=None, filters=None) -> pa.Table:
+        """The one driver-side read of data files: a single scan of
+        ``files`` in the entry schema, so files from ``store_logs`` and
+        ``append_df`` (whose nullability differs) concatenate."""
+        if not files:
+            t = self.schema.empty_table()
+            return t.select(columns) if columns else t
+        return pq.read_table(files, columns=columns, filters=filters, schema=self.schema)
 
     def _buckets(self) -> list[int]:
         return sorted(
@@ -217,35 +222,38 @@ class ParquetEntry:
         # append direction commits data-then-meta; truncation is the
         # opposite — meta-then-data)
         _atomic_write_json(self._meta_path, {"last_index": indx, "truncating": True})
+        self._truncate(indx)
+
+    def _truncate(self, indx: int) -> None:
+        """The file work of ``remove_logs(indx)``; idempotent, so reopen
+        re-runs it after a crash.  The boundary bucket's kept rows land
+        in ``part-rewrite-<indx>`` (tmp + rename) before any original
+        is unlinked: once that file exists it holds every row below
+        ``indx`` of the bucket, and the other files are only unlinked."""
         boundary = indx // self.bucket_size
         for k in self._buckets():
             if k > boundary:
                 shutil.rmtree(self.path / f"bucket={k}")
-            elif k == boundary:
-                files = self._bucket_files(k)
-                kept = []
-                for f in files:
-                    t = pq.read_table(f)
-                    kept.append(t.filter(pa.compute.less(t.column("indx"), indx)))
-                    f.unlink()
-                merged = pa.concat_tables(kept) if kept else None
-                if merged is not None and merged.num_rows:
-                    pq.write_table(
-                        merged.cast(self.schema),
-                        self.path / f"bucket={k}" / f"part-rewrite-{indx:012d}.parquet",
-                    )
-                elif (self.path / f"bucket={k}").exists() and not self._bucket_files(k):
-                    shutil.rmtree(self.path / f"bucket={k}")
+        d = self.path / f"bucket={boundary}"
+        keep = d / f"part-rewrite-{indx:012d}.parquet"
+        files = self._bucket_files(boundary)
+        if keep not in files:
+            kept = self._read(files, filters=[("indx", "<", indx)])
+            if kept.num_rows:
+                pq.write_table(kept, d / "_rewrite.tmp")
+                os.replace(d / "_rewrite.tmp", keep)
+        for f in files:
+            if f != keep:
+                f.unlink()
+        if d.exists() and not self._bucket_files(boundary):
+            shutil.rmtree(d)
         self._last_index = indx
         self._commit_meta()
 
     # -- GetLog (store/store.go:34-35; point lookup) ------------------------
     def get_log(self, indx: int) -> dict | None:
-        for f in self._bucket_files(indx // self.bucket_size):
-            t = pq.read_table(f, filters=[("indx", "=", indx)])
-            if t.num_rows:
-                return t.to_pylist()[0]
-        return None
+        t = self._read(self._bucket_files(indx // self.bucket_size), filters=[("indx", "=", indx)])
+        return t.to_pylist()[0] if t.num_rows else None
 
     # -- distributed access --------------------------------------------------
     def df(self, spark):
@@ -300,71 +308,31 @@ class ParquetEntry:
         self._commit_meta()
         return n
 
-    def scan_tail(self, block_hashes: set[str]) -> list[dict]:
+    def scan_tail(self, match) -> list[dict]:
         """Reverse tail walk (removeLogs's cursor walk, tracker.go:717-754):
-        collect rows from the end while their block_hash is in the removed
-        set; stop at the first non-matching row.  Reads only the bucket(s)
-        actually touched by the reorg — O(reorg depth), never O(entry)."""
-        # pass 1: locate the boundary reading ONLY (indx, block_hash) —
-        # a shallow reorg never deserializes the wide columns of a 10k-row
+        the maximal suffix of rows for which ``match(row)`` holds,
+        oldest-first; ``match`` sees ``indx``, ``block_num`` and
+        ``block_hash``.  Reads only the bucket(s) the suffix touches —
+        O(tail), never O(entry)."""
+        # pass 1: locate the boundary reading ONLY the key columns — a
+        # shallow reorg never deserializes the wide columns of a 10k-row
         # bucket just to peel off a few victims
         boundary: int | None = None
-        stop = False
         for k in reversed(self._buckets()):
-            keys = []
-            for f in self._bucket_files(k):
-                keys.extend(pq.read_table(f, columns=["indx", "block_hash"]).to_pylist())
-            keys.sort(key=lambda r: r["indx"])
-            for r in reversed(keys):
-                if r["block_hash"] in block_hashes:
-                    boundary = r["indx"]
-                else:
-                    stop = True
+            keys = self._read(self._bucket_files(k), ["indx", "block_num", "block_hash"])
+            for r in reversed(keys.sort_by("indx").to_pylist()):
+                if not match(r):
                     break
-            if stop:
-                break
-            # bucket empty or fully matched → walk into the previous bucket
+                boundary = r["indx"]
+            else:
+                continue  # bucket empty or fully matched → previous bucket
+            break
         if boundary is None:
             return []
-        # pass 2: fetch the full victim rows (exactly the reorg tail)
-        victims: list[dict] = []
-        for k in range(boundary // self.bucket_size, (self._last_index - 1) // self.bucket_size + 1):
-            for f in self._bucket_files(k):
-                t = pq.read_table(f, filters=[("indx", ">=", boundary)])
-                victims.extend(t.to_pylist())
-        victims.sort(key=lambda r: r["indx"])
-        return victims
-
-    def truncate_above_block(self, block_num: int) -> int:
-        """Drop the tail of rows with block_num > ``block_num`` and return
-        how many were removed.
-
-        Crash-recovery helper: the append protocol writes logs *before*
-        advancing the lastBlock checkpoint (tracker.go:369-382 ordering),
-        so a crash in between leaves at most one batch of rows above the
-        checkpoint.  Appends are block-ordered, so that suffix is
-        contiguous — the same O(tail) reverse walk as :meth:`scan_tail`,
-        with a block-number predicate instead of a hash set."""
-        boundary: int | None = None
-        stop = False
-        for k in reversed(self._buckets()):
-            keys = []
-            for f in self._bucket_files(k):
-                keys.extend(pq.read_table(f, columns=["indx", "block_num"]).to_pylist())
-            keys.sort(key=lambda r: r["indx"])
-            for r in reversed(keys):
-                if r["block_num"] > block_num:
-                    boundary = r["indx"]
-                else:
-                    stop = True
-                    break
-            if stop:
-                break
-        if boundary is None:
-            return 0
-        removed = self._last_index - boundary
-        self.remove_logs(boundary)
-        return removed
+        # pass 2: fetch the full victim rows (exactly the tail)
+        lo, hi = boundary // self.bucket_size, (self._last_index - 1) // self.bucket_size
+        files = [f for k in range(lo, hi + 1) for f in self._bucket_files(k)]
+        return self._read(files, filters=[("indx", ">=", boundary)]).sort_by("indx").to_pylist()
 
     def compact(self, bucket: int | None = None) -> int:
         """Merge a bucket's small files into one (head micro-batches write
@@ -378,8 +346,7 @@ class ParquetEntry:
             files = self._bucket_files(k)
             if len(files) <= 1:
                 continue
-            t = pa.concat_tables([pq.read_table(f) for f in files]).cast(self.schema)
-            t = t.sort_by("indx")
+            t = self._read(files).sort_by("indx")
             tmp = self.path / f"bucket={k}" / "_compact.tmp"
             pq.write_table(t, tmp)
             for f in files:
@@ -426,12 +393,7 @@ class ParquetEntry:
         files_before = rows_before = 0
         for k in self._buckets():
             fs = self._bucket_files(k)
-            mn = None
-            for f in fs:
-                t = pq.read_table(f, columns=["block_num"])
-                if t.num_rows:
-                    fmn = pa.compute.min(t.column("block_num")).as_py()
-                    mn = fmn if mn is None else min(mn, fmn)
+            mn = pc.min(self._read(fs, ["block_num"]).column("block_num")).as_py()
             if mn is not None and mn < finalized_below:
                 affected.append(k)
                 files_before += len(fs)
@@ -544,8 +506,7 @@ class ParquetEntry:
 
     def all_logs(self) -> list[dict]:
         """Driver-side full read, ordered by indx (test/verification helper)."""
-        out = []
-        for k in self._buckets():
-            for f in self._bucket_files(k):
-                out.extend(pq.read_table(f).to_pylist())
+        out: list[dict] = []
+        for k in self._buckets():  # one bucket's table in memory at a time
+            out.extend(self._read(self._bucket_files(k)).to_pylist())
         return sorted(out, key=lambda r: r["indx"])

@@ -131,7 +131,7 @@ class SqlStore:
 
     # -- entries (GetEntry, postgresql_store.go:79-88) ----------------------
     def entry(
-        self, filter_hash: str, bucket_size: int = 10_000, schema=None, changelog: bool = False
+        self, filter_hash: str, bucket_size: int = 10_000, changelog: bool = False
     ) -> "SqlEntry":
         if filter_hash not in self._entries:
             self._entries[filter_hash] = SqlEntry(
@@ -208,19 +208,19 @@ class SqlEntry:
         ).fetchall()
         return [_decode(r, self.columns) for r in rows]
 
-    def scan_tail(self, block_hashes: set[str]) -> list[dict]:
+    def scan_tail(self, match) -> list[dict]:
         """Reverse tail walk (tracker.go:717-754): victims are the maximal
-        suffix whose block_hash is in the removed set.  The indx-descending
-        scan is an index walk that stops at the first keeper — O(depth)."""
+        suffix of rows satisfying ``match``.  The indx-descending scan is
+        an index walk that stops at the first keeper — O(depth)."""
         victims: list[dict] = []
         cur = self._conn.execute(
             f"SELECT {self._col_list} FROM {self.table} ORDER BY indx DESC"
         )
         for row in cur:
-            if row[5] in block_hashes:  # block_hash position in _COLUMNS
-                victims.append(_decode(row, self.columns))
-            else:
+            r = _decode(row, self.columns)
+            if not match(r):
                 break
+            victims.append(r)
         cur.close()
         victims.reverse()
         return victims

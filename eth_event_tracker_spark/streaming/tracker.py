@@ -218,17 +218,21 @@ class Tracker:
                     time.sleep(self.head_retry_delay)
         return []
 
-    # -- A-2/A-3: rollback removed blocks' logs ------------------------------
-    def _rollback(self, removed: list[Header]) -> list[dict]:
-        # reverse tail walk, O(reorg depth) not O(entry) — the removed
-        # blocks are by construction the newest, so their logs form a
-        # contiguous tail (removeLogs's cursor walk, tracker.go:717-754)
-        victims = self.entry.scan_tail({h.hash for h in removed})
-        if not victims:
-            return []
-        boundary = min(r["indx"] for r in victims)
-        self.entry.remove_logs(boundary)
+    # -- A-2/A-3: rollback the entry's tail ---------------------------------
+    def _truncate_tail(self, match) -> list[dict]:
+        """Remove the maximal tail of rows satisfying ``match``: the
+        reverse walk (O(tail), not O(entry)) then RemoveLogs — the
+        reference's removeLogs cursor walk (tracker.go:717-754)."""
+        victims = self.entry.scan_tail(match)
+        if victims:
+            self.entry.remove_logs(victims[0]["indx"])
         return victims  # oldest-first (A-3, revertLogs tracker.go:756-761)
+
+    def _rollback(self, removed: list[Header]) -> list[dict]:
+        # the removed blocks are by construction the newest, so their
+        # logs form a contiguous tail
+        hashes = {h.hash for h in removed}
+        return self._truncate_tail(lambda r: r["block_hash"] in hashes)
 
     # -- A-4: apply one block diff (doFilter, tracker.go:786-829) -----------
     def _apply_diff(self, diff: BlockDiff) -> ChangelogEvent:
@@ -309,10 +313,10 @@ class Tracker:
             origin = max(window_tail, last.number if last else -1) + 1
             # The append protocol stores logs BEFORE committing the
             # checkpoint, so a crash in between leaves ≤ one batch of rows
-            # above `origin-1` in the entry; drop them so the re-fetch
+            # at or above `origin` in the entry; drop them so the re-fetch
             # can't duplicate (they were never exposed past a committed
             # checkpoint, so no retraction event is owed)
-            self.entry.truncate_above_block(origin - 1)
+            self._truncate_tail(lambda r: r["block_num"] >= origin)
         else:
             origin = self._fast_track()  # O-2 skip-scan / S-3 probe
         target = self.provider.latest()

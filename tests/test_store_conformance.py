@@ -244,10 +244,109 @@ def test_scan_tail_stops_at_boundary(tmp_path):
     e.store_logs(_logs(0x3, 4, 3))  # indx 6-9, spans buckets 1-2
     tail_hash = mock(0x3).num(3).hash
     mid_hash = mock(0x2).num(2).hash
-    got = e.scan_tail({tail_hash, mid_hash})
+    got = e.scan_tail(lambda r: r["block_hash"] in {tail_hash, mid_hash})
     assert [r["indx"] for r in got] == [3, 4, 5, 6, 7, 8, 9]
     # a hash set matching only non-tail rows yields nothing (walk stops)
-    assert e.scan_tail({mock(0x1).num(1).hash}) == []
+    assert e.scan_tail(lambda r: r["block_hash"] == mock(0x1).num(1).hash) == []
+
+
+def test_mixed_writer_bucket(tmp_path):
+    """A bucket holding files from both writers (append_df's Spark files
+    mark indx/block_num/block_hash not-null, store_logs' are nullable)
+    reads, truncates and compacts as one schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    e = ParquetStore(tmp_path).entry("f1")
+    strict = pa.schema(
+        [f.with_nullable(f.name not in ("indx", "block_num", "block_hash")) for f in e.schema]
+    )
+
+    def spark_write(tag, num):  # what append_df leaves, written without Spark
+        base = e.last_index()
+        rows = [{**lg, "indx": base + i} for i, lg in enumerate(_logs(tag, 3, num))]
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=strict),
+            tmp_path / "entries" / "f1" / "bucket=0" / f"part-{tag:05d}-spark.snappy.parquet",
+        )
+        return ParquetStore(tmp_path).entry("f1"), rows  # reopen: the scan finds the rows
+
+    e.store_logs(_logs(0x1, 3, 1))
+    e, spark_rows = spark_write(0x2, 2)
+    e.store_logs(_logs(0x3, 3, 3))
+    assert [r["indx"] for r in e.all_logs()] == list(range(9))
+    assert e.get_log(4)["tx_hash"] == spark_rows[1]["tx_hash"]
+    e.remove_logs(7)
+    assert [r["indx"] for r in e.all_logs()] == list(range(7))
+    e, _ = spark_write(0x4, 4)
+    before = e.all_logs()
+    assert len(before) == 10
+    assert e.compact() == 2
+    assert e.all_logs() == before
+
+
+@pytest.mark.parametrize("fail_at", ["write", "replace", "first_unlink", "last_unlink"])
+def test_remove_logs_crash_recovery(tmp_path, monkeypatch, fail_at):
+    """A crash at any step of remove_logs: the reopened entry holds
+    exactly the rows below indx, once each, and appends continue."""
+    import os
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    e = ParquetStore(tmp_path).entry("f1", bucket_size=8)
+    for b in range(1, 7):  # 18 rows in buckets 0-2, several files each
+        e.store_logs(_logs(b, 3, b))
+    want = e.all_logs()[:10]
+    originals = len(list((tmp_path / "entries" / "f1" / "bucket=1").glob("*.parquet")))
+
+    def crash_on(step, real, nth=1):
+        calls = [0]
+
+        def f(*a, **kw):
+            calls[0] += 1
+            if calls[0] == nth:
+                raise RuntimeError(f"injected crash in {step}")
+            return real(*a, **kw)
+
+        return f
+
+    if fail_at == "write":  # the kept rows' tmp file
+        monkeypatch.setattr(pq, "write_table", crash_on(fail_at, pq.write_table))
+    elif fail_at == "replace":  # 1st replace commits the intent, 2nd the kept rows
+        monkeypatch.setattr(os, "replace", crash_on(fail_at, os.replace, 2))
+    else:  # the boundary bucket's originals
+        nth = 1 if fail_at == "first_unlink" else originals
+        monkeypatch.setattr(pathlib.Path, "unlink", crash_on(fail_at, pathlib.Path.unlink, nth))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        e.remove_logs(10)
+    monkeypatch.undo()
+
+    e2 = ParquetStore(tmp_path).entry("f1", bucket_size=8)
+    assert e2.last_index() == 10
+    assert e2.all_logs() == want
+    e2.store_logs(_logs(0x9, 2, 9))
+    assert [r["indx"] for r in e2.all_logs()] == list(range(12))
+    # the finished truncation stays finished across another reopen
+    assert ParquetStore(tmp_path).entry("f1", bucket_size=8).all_logs() == e2.all_logs()
+
+
+def test_append_df_matches_store_logs(make_store, spark):
+    """Every backend takes the tracker's bulk path: append_df lands the
+    rows store_logs would, with the same indx."""
+    from eth_event_tracker_spark.schemas import RAW_LOG_SCHEMA
+
+    logs = [lg for b in range(1, 6) for lg in _logs(b, 3, b)]
+    model = InMemStore().entry("f1")
+    model.store_logs(logs)
+    cols = [f.name for f in RAW_LOG_SCHEMA.fields]
+    e = make_store().entry("f1")
+    assert e.append_df(spark.createDataFrame([tuple(lg[c] for c in cols) for lg in logs], RAW_LOG_SCHEMA)) == 15
+    assert e.last_index() == 15
+    keys = ("indx", "tx_hash", "block_num", "block_hash", "topics", "data")
+    assert [[r[c] for c in keys] for r in e.all_logs()] == [
+        [r[c] for c in keys] for r in model.all_logs()
+    ]
 
 
 # ---------------------------------------------------------------------------

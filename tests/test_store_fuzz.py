@@ -25,11 +25,14 @@ from eth_event_tracker_spark.store.inmem_store import InMemStore
 # an op is one of:
 #   ("append", n_logs, topics_mode)   topics_mode: 0 normal, 1 empty, 2 none
 #   ("truncate", frac)                remove_logs at frac * last_index
+#   ("rollback", depth)               scan_tail over the last depth blocks,
+#                                     then remove_logs (the tracker's reorg)
 #   ("reopen",)                       durable stores must survive this
 _OPS = st.lists(
     st.one_of(
         st.tuples(st.just("append"), st.integers(1, 6), st.integers(0, 2)),
         st.tuples(st.just("truncate"), st.floats(0.0, 1.0)),
+        st.tuples(st.just("rollback"), st.integers(1, 4)),
         st.tuples(st.just("reopen")),
     ),
     min_size=1,
@@ -47,6 +50,10 @@ def _mk_logs(tag: int, n: int, num: int, topics_mode: int) -> list[dict]:
     elif topics_mode == 2:
         logs = [{**lg, "topics": None} for lg in logs]
     return logs
+
+
+def _cols(r: dict) -> tuple:
+    return tuple(r[c] for c in ("indx", "tx_hash", "block_num", "block_hash", "topics", "data"))
 
 
 def _run_ops(ops, make_store, reopen):
@@ -67,6 +74,14 @@ def _run_ops(ops, make_store, reopen):
             at = int(m_entry.last_index() * frac)
             entry.remove_logs(at)
             m_entry.remove_logs(at)
+        elif op[0] == "rollback":
+            depth = op[1]
+            got = entry.scan_tail(lambda r: r["block_num"] > blk - depth)
+            want = m_entry.scan_tail(lambda r: r["block_num"] > blk - depth)
+            assert [_cols(r) for r in got] == [_cols(r) for r in want], f"victims at step {step}"
+            if want:
+                entry.remove_logs(got[0]["indx"])
+                m_entry.remove_logs(want[0]["indx"])
         else:  # reopen
             store, entry = reopen(store)
         assert entry.last_index() == m_entry.last_index(), f"last_index after step {step}"

@@ -14,6 +14,8 @@ from eth_event_tracker_spark.sources.mock_chain import MockProvider
 from eth_event_tracker_spark.store import ParquetStore
 from eth_event_tracker_spark.streaming import FingerprintMismatchError, Tracker
 
+from .test_store_conformance import make_store  # noqa: F401  (fixture)
+
 
 def chain_logs(prov):
     return [lg for b in prov.canonical for lg in b.logs()]
@@ -46,21 +48,21 @@ def test_bulk_sync_long_chain(tmp_path):
     assert [r["tx_hash"] for r in rows] == [lg["tx_hash"] for lg in chain_logs(prov)]
 
 
-def test_restart_resume(tmp_path):
+def test_restart_resume(make_store):
     """TestTrackerSyncerRestarts (tracker_test.go:221-275): stop/start
     resumes from the checkpoint, no duplicates, both small and large
-    advances."""
+    advances — on every store backend."""
     prov = MockProvider()
     prov.advance(30, logs_per_block=1)
-    Tracker(prov, ParquetStore(tmp_path), FilterConfig()).sync()
+    Tracker(prov, make_store(), FilterConfig()).sync()
     # advance less than backlog, restart
     prov.advance(5, logs_per_block=1)
-    t2 = Tracker(prov, ParquetStore(tmp_path), FilterConfig())
+    t2 = Tracker(prov, make_store(), FilterConfig())
     t2.sync()
     assert [r["tx_hash"] for r in t2.entry.all_logs()] == [lg["tx_hash"] for lg in chain_logs(prov)]
     # advance more than backlog, restart
     prov.advance(40, logs_per_block=1)
-    t3 = Tracker(prov, ParquetStore(tmp_path), FilterConfig())
+    t3 = Tracker(prov, make_store(), FilterConfig())
     t3.sync()
     assert [r["tx_hash"] for r in t3.entry.all_logs()] == [lg["tx_hash"] for lg in chain_logs(prov)]
 
@@ -155,36 +157,36 @@ def test_crash_mid_bulk_restart_no_duplicates(tmp_path):
     assert [r["indx"] for r in rows] == list(range(200))  # dense, no dupes
 
 
-def test_crash_between_store_and_checkpoint(tmp_path):
+def test_crash_between_store_and_checkpoint(make_store):
     """The append protocol writes logs BEFORE the checkpoint commit; a
     crash in between leaves one batch of rows above lastBlock.  Restart
-    must truncate that un-checkpointed suffix before re-fetching."""
+    must truncate that un-checkpointed suffix before re-fetching — on
+    every store backend."""
     prov = MockProvider()
     prov.advance(100, logs_per_block=2)
     # batch i: get_logs(...) then get_block_by_number(end) for the commit —
     # failing the 2nd block fetch crashes after batch 2's store_logs
     crash = CrashingProvider(prov, fail_on_get_block=2)
-    t = Tracker(crash, ParquetStore(tmp_path), FilterConfig(batch_size=10))
+    t = Tracker(crash, make_store(), FilterConfig(batch_size=10))
     with pytest.raises(RuntimeError):
         t.sync()
     stored = t.entry.all_logs()
-    assert t2_last_block(tmp_path) == 9  # only batch 1 checkpointed…
+    assert t2_last_block(make_store()) == 9  # only batch 1 checkpointed…
     assert max(r["block_num"] for r in stored) > 9  # …but batch 2 rows landed
 
-    t2 = Tracker(prov, ParquetStore(tmp_path), FilterConfig(batch_size=10))
+    t2 = Tracker(prov, make_store(), FilterConfig(batch_size=10))
     t2.sync()
     rows = t2.entry.all_logs()
     assert [r["tx_hash"] for r in rows] == [lg["tx_hash"] for lg in chain_logs(prov)]
     assert [r["indx"] for r in rows] == list(range(200))
 
 
-def t2_last_block(tmp_path) -> int:
+def t2_last_block(store) -> int:
     """Read the persisted lastBlock checkpoint number for the default filter."""
     import json
 
     from eth_event_tracker_spark.config import key_last_block
 
-    store = ParquetStore(tmp_path)
     raw = store.get(key_last_block(FilterConfig().filter_hash))
     return json.loads(raw)["number"]
 
@@ -227,6 +229,18 @@ def test_distributed_bulk_backfill_matches_driver_path(tmp_path, spark):
     assert sum(len(e.added) for e in events) == 3
     assert [r["tx_hash"] for r in t2.entry.all_logs()] == [
         lg["tx_hash"] for lg in chain_logs(prov)
+    ]
+    # a head reorg rewrites the bucket that holds both append_df's and
+    # store_logs' files: the entry stays canonical, the orphans retract
+    before = chain_logs(prov)
+    prov.fork(3, logs_per_block=2)
+    events = t2.poll()
+    canonical = {lg["tx_hash"] for lg in chain_logs(prov)}
+    orphaned = [lg["tx_hash"] for lg in before if lg["tx_hash"] not in canonical]
+    assert len(orphaned) == 3
+    assert [r["tx_hash"] for e in events for r in e.removed] == orphaned
+    assert t2.entry.all_logs() == [
+        {**lg, "indx": i} for i, lg in enumerate(chain_logs(prov))
     ]
 
 
